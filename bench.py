@@ -208,7 +208,8 @@ def stage_profile(spark, docs_path: str, pages_path: str, level: int = 1) -> dic
 
     documents = spark.read.parquet(docs_path)
     media_pages = spark.read.parquet(pages_path)
-    text_spans, media_spans = route_spans(explode_spans(documents))
+    spans = explode_spans(documents)
+    _, media_spans = route_spans(spans)
     pages = tokenize_fixture(media_spans, media_pages)
     extracted = extract_page_rows(pages, level)
 
@@ -224,7 +225,7 @@ def stage_profile(spark, docs_path: str, pages_path: str, level: int = 1) -> dic
     stages = {
         "scan_documents": timed(documents),
         "scan_pages": timed(media_pages),
-        "text_branch_spans": timed(reassemble_flat(text_spans, media_spans)),
+        "text_branch_spans": timed(reassemble_flat(spans)),
         "tokenize_join": timed(pages),
         "arrow_extract": timed(extracted),
     }

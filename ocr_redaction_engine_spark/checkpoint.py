@@ -17,7 +17,20 @@ an append-only parquet/Iceberg lineage table keyed by a stable hash bucket of
                       bucket-partitioned dynamic overwrite makes reruns
                       idempotent).
 * Metrics           = per-bucket aggregates (A8) — queryable lineage instead
-                      of log lines.
+                      of log lines — OBSERVED during the sink writes
+                      (``DataFrame.observe``), never re-read from the
+                      written parquet. Observed metrics allow no distinct
+                      aggregates, so the span counts are taken per
+                      document on the wave's valid documents and summed
+                      per bucket: ``n_docs`` = documents with at least one
+                      text/media span, ``n_spans`` = their text/media
+                      spans, ``n_pages`` = each document's distinct
+                      non-empty media refs, summed (equal to the bucket's
+                      distinct refs whenever no media_ref is shared across
+                      documents, as in ``corpus.write_corpus``);
+                      ``n_boxes`` = rows of the redactions write. Spark
+                      merges a task's observed metrics only from its
+                      successful attempt, so retried tasks count once.
 
 Bucketing uses xxhash64(doc_id) so the same document always lands in the same
 bucket across runs and cluster sizes — the property that makes resume exact
@@ -28,7 +41,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 CHECKPOINT_SCHEMA = (
@@ -87,6 +100,56 @@ def append_checkpoint(spark: SparkSession, ckpt_dir: str, rows: list[dict]) -> N
           r.get("n_boxes", 0), r.get("wall_sec", 0.0)) for r in rows],
         schema=CHECKPOINT_SCHEMA,
     ).write.mode("append").parquet(ckpt_dir)
+
+
+def observe_span_lineage(documents: DataFrame, obs: Observation,
+                         group: list[int], n_buckets: int) -> DataFrame:
+    """``documents`` (doc_id, spans[]) with the span lineage of every bucket
+    in ``group`` attached to ``obs``; the counts are collected by the action
+    that writes the spans sink from the returned frame. One
+    ``sum(when(bucket == b, …))`` per bucket over per-document columns
+    computed once (the module docstring defines the counts)."""
+    # SQL text, not Python lambdas/Columns: each F.expr is one driver→JVM
+    # call, and this runs once per wave with 3 metrics per bucket.
+    # greatest() maps a null spans array (size null or -1) to 0
+    counted = documents.select(
+        "*", bucket_col(n_buckets).alias("_lb"),
+        F.expr("greatest(size(filter(spans, s -> s.kind IN ('text', 'media'))), 0)")
+        .alias("_ls"),
+        F.expr("greatest(size(array_distinct(filter(transform(filter(spans, "
+               "s -> s.kind = 'media'), s -> s.media_ref), r -> r != ''))), 0)")
+        .alias("_lp"))
+    metrics = []
+    for b in group:
+        metrics += [
+            F.expr(f"count(CASE WHEN _lb = {b} AND _ls > 0 AND doc_id IS NOT NULL "
+                   f"THEN 1 END) AS n_docs_{b}"),
+            F.expr(f"sum(CASE WHEN _lb = {b} THEN _ls END) AS n_spans_{b}"),
+            F.expr(f"sum(CASE WHEN _lb = {b} THEN _lp END) AS n_pages_{b}"),
+        ]
+    return counted.observe(obs, *metrics).select(*documents.columns)
+
+
+def observe_box_lineage(redactions: DataFrame, obs: Observation,
+                        group: list[int]) -> DataFrame:
+    """``redactions`` (with its ``bucket`` column) with each bucket's row
+    count in ``group`` attached to ``obs``."""
+    return redactions.observe(obs, *[
+        F.expr(f"count(CASE WHEN bucket = {b} THEN 1 END) AS n_boxes_{b}")
+        for b in group])
+
+
+def lineage_rows(spans_obs: Observation, boxes_obs: Observation,
+                 group: list[int], wall_sec: float) -> list[dict]:
+    """Checkpoint rows for ``group`` from the two observations. Call only
+    after both writes SUCCEEDED: ``Observation.get`` blocks until its action
+    reports, and a failed write never does."""
+    m = {**spans_obs.get, **boxes_obs.get}
+    return [{"bucket": b, "status": "done",
+             **{k: m[f"{k}_{b}"] or 0
+                for k in ("n_docs", "n_spans", "n_pages", "n_boxes")},
+             "wall_sec": wall_sec}
+            for b in group]
 
 
 class StageTimer:

@@ -1,11 +1,12 @@
 """Span-sequence reassembly (SURVEY.md §2.6 A5) — the north-rule output.
 
 The flat contract table is (doc_id, order, kind, text, media_ref) with
-``order`` = the original span offset; it requires NO shuffle at all (union of
-two narrow branches). ``assemble_documents`` additionally folds back to one
-row per document — a single hash aggregation on doc_id — for consumers that
-want the array shape; ``array_sort`` on struct(order, …) restores original
-span order regardless of task interleaving.
+``order`` = the original span offset; it requires NO shuffle at all (one
+kind-dispatched projection over one explode). ``assemble_documents``
+additionally folds back to one row per document — a single hash aggregation
+on doc_id — for consumers that want the array shape; ``array_sort`` on
+struct(order, …) restores original span order regardless of task
+interleaving.
 """
 
 from __future__ import annotations
@@ -16,28 +17,26 @@ from pyspark.sql import functions as F
 from ..pii import redact_text_col
 
 
+def reassemble_flat(spans: DataFrame) -> DataFrame:
+    """Exploded spans (``explode_spans``) → the flat contract table in ONE
+    pass: text spans are PII-redacted with an empty media_ref, media spans
+    pass through with an empty text, every other kind is dropped. A
+    kind-dispatched CASE over a single scan instead of a union of two
+    filtered branches (which reads the documents table twice)."""
+    is_text = F.col("kind") == "text"
+    return spans.where(F.col("kind").isin("text", "media")).select(
+        "doc_id",
+        F.col("offset").alias("order"),
+        "kind",
+        F.when(is_text, redact_text_col(F.col("text"))).otherwise(F.lit(""))
+        .alias("text"),
+        F.when(is_text, F.lit("")).otherwise(F.col("media_ref")).alias("media_ref"),
+    )
+
+
 def redacted_text_spans(text_spans: DataFrame) -> DataFrame:
-    return text_spans.select(
-        "doc_id",
-        F.col("offset").alias("order"),
-        F.lit("text").alias("kind"),
-        redact_text_col(F.col("text")).alias("text"),
-        F.lit("").alias("media_ref"),
-    )
-
-
-def passthrough_media_spans(media_spans: DataFrame) -> DataFrame:
-    return media_spans.select(
-        "doc_id",
-        F.col("offset").alias("order"),
-        F.lit("media").alias("kind"),
-        F.lit("").alias("text"),
-        "media_ref",
-    )
-
-
-def reassemble_flat(text_spans: DataFrame, media_spans: DataFrame) -> DataFrame:
-    return redacted_text_spans(text_spans).unionByName(passthrough_media_spans(media_spans))
+    """The text arm of :func:`reassemble_flat` alone (input: text spans)."""
+    return reassemble_flat(text_spans)
 
 
 def assemble_documents(flat_spans: DataFrame) -> DataFrame:

@@ -1,7 +1,8 @@
 """End-to-end redaction pipeline (SURVEY.md §3.4) — pure DataFrame wiring.
 
-    documents ──explode──┬─ text spans ── regexp PII redact ──┬─ reassembled spans
-                         └─ media spans ── tokenize(join) ────┘
+    documents ──explode── kind CASE (text → regexp PII redact,
+                          media → passthrough) ───────────── spans
+    documents ──explode── media spans ── tokenize(join)
                                └─ mapInPandas kernel (identify + extract
                                   + page-local seq/quirks) ── redactions + values
 
@@ -19,18 +20,19 @@ partitioning is too coarse for the Python stage; AQE splits join skew).
 from __future__ import annotations
 
 import logging
-from dataclasses import dataclass
+import threading
+from dataclasses import dataclass, replace
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import checkpoint as ckpt
 from .operators.explode import explode_spans, route_spans
 from .operators.extract import extract_page_rows
 from .operators.redactions import build_redactions, build_values
-from .operators.reassemble import assemble_documents, reassemble_flat
+from .operators.reassemble import reassemble_flat
 from .operators.tokenize import tokenize_fixture
-from .operators.validate import (VALID_EXTENSIONS, collect_invalid,
+from .operators.validate import (INVALID_DDL, VALID_EXTENSIONS, collect_invalid,
                                  route_with_collected, validity_route)
 
 _log = logging.getLogger(__name__)
@@ -71,13 +73,30 @@ class PipelineConfig:
 
 def run_pipeline(documents: DataFrame, media_pages: DataFrame,
                  config: PipelineConfig | None = None,
-                 counters: dict | None = None) -> dict[str, DataFrame]:
-    """Plan builder: returns the output DataFrames. With
-    ``cfg.validate=True`` (the default) it EAGERLY runs the bounded
+                 counters: dict | None = None,
+                 observe_spans=None) -> dict[str, DataFrame]:
+    """Plan builder: returns the output DataFrames, keyed
+
+    * ``spans`` — the flat span-sequence table (doc_id, order, kind, text,
+      media_ref) of the valid documents;
+    * ``page_rows`` — the flat Arrow-stage output (persist it when forcing
+      more than one of the two sinks below, or the stage recomputes);
+    * ``redactions`` / ``values`` — the box and value sinks;
+    * ``invalid`` — the P1 INVALID_DOCUMENT status rows (empty frame when
+      ``cfg.validate=False``).
+
+    Array-form documents and the reference XML are not built here: call
+    ``reassemble.assemble_documents(outs["spans"])`` and
+    ``xml_sink.render_{redactions,values}_xml(outs["page_rows"])``.
+
+    With ``cfg.validate=True`` (the default) it EAGERLY runs the bounded
     validity-probe job at call time (one slim schema-pruned scan, like the
     reference's promotion-time check); set ``validate=False`` or pre-supply
     ``cfg.invalid_rows`` to restore a fully lazy build. ``counters`` =
-    optional accumulator dict for live progress metrics (A8)."""
+    optional accumulator dict for live progress metrics (A8).
+    ``observe_spans`` = optional ``DataFrame -> DataFrame`` applied to the
+    valid documents that feed the ``spans`` output only (run_job attaches
+    its lineage observation there)."""
     cfg = config or PipelineConfig()
     if cfg.validate:
         # P1: INVALID_DOCUMENT is terminal BEFORE any processing — one slim
@@ -98,10 +117,8 @@ def run_pipeline(documents: DataFrame, media_pages: DataFrame,
         else:
             documents, invalid = route_with_collected(documents, inv_rows)
     else:
-        invalid = documents.sparkSession.createDataFrame(
-            [], "doc_id string, status string, task_result string, reason string")
-    spans = explode_spans(documents)
-    text_spans, media_spans = route_spans(spans)
+        invalid = documents.sparkSession.createDataFrame([], INVALID_DDL)
+    _, media_spans = route_spans(explode_spans(documents))
 
     pages = tokenize_fixture(media_spans, media_pages)
     if cfg.extract_partitions:
@@ -113,21 +130,12 @@ def run_pipeline(documents: DataFrame, media_pages: DataFrame,
     # SQL-expressible classification workloads
     extracted = extract_page_rows(pages, cfg.level, counters, places=cfg.places)
 
-    from .operators.xml_sink import render_redactions_xml, render_values_xml
-
-    flat_spans = reassemble_flat(text_spans, media_spans)
+    span_docs = observe_spans(documents) if observe_spans else documents
     return {
-        "spans": flat_spans,
-        "documents": assemble_documents(flat_spans),
-        # the flat extract output — persist this when forcing more than one
-        # of the sinks below, or the Arrow stage recomputes per action
+        "spans": reassemble_flat(explode_spans(span_docs)),
         "page_rows": extracted,
         "redactions": build_redactions(extracted),
         "values": build_values(extracted),
-        # byte-identical reference XML documents (lazy; computed only if forced)
-        "redactions_xml": render_redactions_xml(extracted),
-        "values_xml": render_values_xml(extracted),
-        # P1 third terminal status (empty frame when cfg.validate=False)
         "invalid": invalid,
     }
 
@@ -176,27 +184,23 @@ def run_job(spark: SparkSession, documents_path: str, media_pages_path: str,
     # P1 validity: probe the WHOLE corpus once (the reference validates once,
     # at promotion), write the status sink, and thread the collected rows
     # into every wave so no wave re-runs the probe join
-    from dataclasses import replace as _replace
-    from .operators.validate import INVALID_DDL
     if cfg.validate:
         slim_docs = spark.read.schema(
             "doc_id string, spans array<struct<kind:string,media_ref:string>>"
         ).parquet(documents_path)
         inv_rows = collect_invalid(slim_docs, media_pages, cfg.ext_whitelist)
         if inv_rows is None:   # > COLLECT_CAP invalid docs — let waves route lazily
-            inv_rows_cfg = None
             inv_df = validity_route(docs.drop("bucket"), media_pages,
                                     cfg.ext_whitelist)[1]
         else:
-            inv_rows_cfg = inv_rows
             inv_df = spark.createDataFrame(
                 [tuple(r) for r in inv_rows], INVALID_DDL)
     else:
-        inv_rows_cfg = []
+        inv_rows = []
         inv_df = spark.createDataFrame([], INVALID_DDL)
     ckpt.with_bucket(inv_df, cfg.n_buckets).write.mode("overwrite") \
         .partitionBy("bucket").parquet(f"{out_dir}/invalid")
-    wave_cfg = _replace(cfg, invalid_rows=inv_rows_cfg)
+    wave_cfg = replace(cfg, invalid_rows=inv_rows)
 
     stats = {"buckets_done_before": len(done), "waves": 0,
              "buckets_skipped_claimed": len(buckets_lost)}
@@ -204,7 +208,14 @@ def run_job(spark: SparkSession, documents_path: str, media_pages_path: str,
         group = remaining[g: g + cfg.bucket_group]
         timer = ckpt.StageTimer()
         wave_docs = docs.filter(F.col("bucket").isin(group))
-        outs = run_pipeline(wave_docs.drop("bucket"), media_pages, wave_cfg, counters)
+        # per-bucket lineage (A8) is observed on the sink writes below: the
+        # span counts at document level on the valid documents feeding the
+        # spans sink, n_boxes on the redactions rows
+        spans_obs, boxes_obs = Observation(), Observation()
+        outs = run_pipeline(
+            wave_docs.drop("bucket"), media_pages, wave_cfg, counters,
+            observe_spans=lambda d: ckpt.observe_span_lineage(
+                d, spans_obs, group, cfg.n_buckets))
         # redactions + values both derive from the flat extract output;
         # persist it so the Arrow stage runs once per wave, not per sink
         page_rows = outs["page_rows"].persist()
@@ -214,8 +225,6 @@ def run_job(spark: SparkSession, documents_path: str, media_pages_path: str,
         # Arrow stage's JVM threads block on the Python workers (r5;
         # redactions then values stay sequential — the first fills the
         # page_rows cache the second reads)
-        import threading
-
         spans_err: list[BaseException] = []
 
         def _write_spans():
@@ -229,45 +238,31 @@ def run_job(spark: SparkSession, documents_path: str, media_pages_path: str,
         spans_t = threading.Thread(target=_write_spans)
         spans_t.start()
         try:
-            red = ckpt.with_bucket(outs["redactions"], cfg.n_buckets)
+            red = ckpt.observe_box_lineage(
+                ckpt.with_bucket(outs["redactions"], cfg.n_buckets), boxes_obs, group)
             red.write.mode("overwrite").partitionBy("bucket").parquet(f"{out_dir}/redactions")
             vals = ckpt.with_bucket(outs["values"], cfg.n_buckets)
             vals.write.mode("overwrite").partitionBy("bucket").parquet(f"{out_dir}/values")
         finally:
             spans_t.join()
             page_rows.unpersist()
+        # a failed write never reports its observation (get would block)
         if spans_err:
             raise spans_err[0]
 
-        # per-bucket lineage metrics from the data just written (A8)
-        m = {r["bucket"]: r for r in
-             spark.read.parquet(f"{out_dir}/spans").filter(F.col("bucket").isin(group))
-             .groupBy("bucket")
-             .agg(F.countDistinct("doc_id").alias("n_docs"), F.count("*").alias("n_spans"),
-                  F.countDistinct(F.when(F.col("media_ref") != "", F.col("media_ref")))
-                  .alias("n_pages"))
-             .collect()}
-        b = {r["bucket"]: r["n_boxes"] for r in
-             spark.read.parquet(f"{out_dir}/redactions").filter(F.col("bucket").isin(group))
-             .groupBy("bucket").agg(F.count("*").alias("n_boxes")).collect()}
-        wall = timer.elapsed()
-        ckpt.append_checkpoint(spark, ckpt_dir, [
-            {"bucket": bk, "status": "done",
-             "n_docs": m[bk]["n_docs"] if bk in m else 0,
-             "n_spans": m[bk]["n_spans"] if bk in m else 0,
-             "n_pages": m[bk]["n_pages"] if bk in m else 0,
-             "n_boxes": b.get(bk, 0),
-             "wall_sec": wall / max(1, len(group))}
-            for bk in group
-        ])
+        # lineage last: only after all three sinks committed
+        ckpt.append_checkpoint(spark, ckpt_dir, ckpt.lineage_rows(
+            spans_obs, boxes_obs, group, timer.elapsed() / len(group)))
         stats["waves"] += 1
     stats["buckets_total"] = cfg.n_buckets
     stats["acc_pages"] = counters["pages"].value
     stats["acc_rejected"] = counters["rejected"].value
-    # explicit schema: a zero-invalid run leaves the partitioned dir empty,
-    # which schema inference cannot read (and downstream readers should use
-    # the same pattern)
-    stats["n_invalid"] = spark.read.schema(
-        "doc_id string, status string, task_result string, reason string, "
-        "bucket int").parquet(f"{out_dir}/invalid").count()
+    if inv_rows is not None:
+        stats["n_invalid"] = len(inv_rows)
+    else:
+        # lazy over-COLLECT_CAP route: count the sink. Explicit schema: a
+        # zero-invalid run leaves the partitioned dir empty, which schema
+        # inference cannot read (downstream readers should do the same)
+        stats["n_invalid"] = spark.read.schema(
+            INVALID_DDL + ", bucket int").parquet(f"{out_dir}/invalid").count()
     return stats

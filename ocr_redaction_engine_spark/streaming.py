@@ -51,14 +51,14 @@ def stream_pipeline(spark: SparkSession, documents_path: str, media_pages_path: 
     media_pages = spark.read.parquet(media_pages_path)  # static side
 
     spans = explode_spans(docs)
-    text_spans, media_spans = route_spans(spans)
+    _, media_spans = route_spans(spans)
 
     from .operators.tokenize import tokenize_fixture
     pages = tokenize_fixture(media_spans, media_pages)
     redactions = build_redactions(extract_page_rows(pages, level))
 
     q_spans = (
-        reassemble_flat(text_spans, media_spans).writeStream
+        reassemble_flat(spans).writeStream
         .format("parquet")
         .option("path", f"{out_dir}/spans")
         .option("checkpointLocation", f"{ckpt_dir}/spans")
@@ -328,32 +328,6 @@ def run_windowed_stream(spark: SparkSession, events_path: str, ckpt_dir: str,
         .start()
     )
     q.awaitTermination()
-
-
-def stream_extraction(spark: SparkSession, documents_path: str,
-                      media_pages_path: str, out_dir: str, ckpt_dir: str,
-                      await_termination: bool = True):
-    """Main-content extraction as ONE native streaming query: the html strip
-    is per-row array HOFs (stateless), pdf/text are narrow projections, and
-    the media branch is a stream-static equi-join — all append-mode legal,
-    so the whole north-rule pipeline streams with exactly-once file-sink
-    semantics and no state store. New crawl files under ``documents_path``
-    become micro-batches; reprocessing = delete the checkpoint."""
-    from .extraction_pipeline import extract_spans
-
-    docs = read_documents_stream(spark, documents_path)
-    media_pages = spark.read.parquet(media_pages_path)  # static side
-    q = (
-        extract_spans(docs, media_pages).writeStream
-        .format("parquet")
-        .option("path", f"{out_dir}/main_spans")
-        .option("checkpointLocation", f"{ckpt_dir}/main_spans")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if await_termination:
-        q.awaitTermination()
-    return q
 
 
 def stream_interval_join(clicks: DataFrame, errors: DataFrame,

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from ocr_redaction_engine_spark import oracle
 from ocr_redaction_engine_spark.operators.explode import explode_spans, route_spans
+from ocr_redaction_engine_spark.operators.reassemble import assemble_documents
 from ocr_redaction_engine_spark.operators.tokenize import (
     tokenize_fixture, tokenize_payload)
 from ocr_redaction_engine_spark.pipeline import PipelineConfig, run_pipeline
@@ -88,4 +89,5 @@ def test_empty_spans_document_disappears(spark, corpus_dfs, local_corpus):
     empty = spark.createDataFrame([("doc-empty", [])], DOCUMENTS_DDL)
     outs = run_pipeline(docs_df.unionByName(empty), pages_df, PipelineConfig())
     assert outs["spans"].filter(F.col("doc_id") == "doc-empty").count() == 0
-    assert outs["documents"].filter(F.col("doc_id") == "doc-empty").count() == 0
+    documents = assemble_documents(outs["spans"])
+    assert documents.filter(F.col("doc_id") == "doc-empty").count() == 0

@@ -13,6 +13,7 @@ from __future__ import annotations
 import pytest
 
 from ocr_redaction_engine_spark import oracle
+from ocr_redaction_engine_spark.operators.reassemble import assemble_documents
 from ocr_redaction_engine_spark.pipeline import PipelineConfig, run_pipeline
 
 
@@ -20,6 +21,7 @@ from ocr_redaction_engine_spark.pipeline import PipelineConfig, run_pipeline
 def outputs(spark, corpus_dfs):
     docs_df, pages_df = corpus_dfs
     outs = run_pipeline(docs_df, pages_df, PipelineConfig(level=1))
+    outs["documents"] = assemble_documents(outs["spans"])
     return {k: v.collect() for k, v in outs.items()}
 
 
