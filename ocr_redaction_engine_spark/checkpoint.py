@@ -15,22 +15,33 @@ an append-only parquet/Iceberg lineage table keyed by a stable hash bucket of
                       (write order: data first, lineage second → a crash
                       re-processes at most the in-flight bucket group, and the
                       bucket-partitioned dynamic overwrite makes reruns
-                      idempotent).
-* Metrics           = per-bucket aggregates (A8) — queryable lineage instead
-                      of log lines — OBSERVED during the sink writes
-                      (``DataFrame.observe``), never re-read from the
-                      written parquet. Observed metrics allow no distinct
-                      aggregates, so the span counts are taken per
-                      document on the wave's valid documents and summed
-                      per bucket: ``n_docs`` = documents with at least one
-                      text/media span, ``n_spans`` = their text/media
-                      spans, ``n_pages`` = each document's distinct
-                      non-empty media refs, summed (equal to the bucket's
-                      distinct refs whenever no media_ref is shared across
-                      documents, as in ``corpus.write_corpus``);
-                      ``n_boxes`` = rows of the redactions write. Spark
-                      merges a task's observed metrics only from its
-                      successful attempt, so retried tasks count once.
+                      idempotent). The rows are written from a JVM-local
+                      relation (``local_frame``), which starts no Python
+                      worker.
+* Metrics           = per-bucket aggregates (A8), OBSERVED during the sink
+                      writes (``DataFrame.observe``), never re-read from the
+                      written parquet; Spark merges a task's metrics only
+                      from its successful attempt, so a retried task counts
+                      once. Observed metrics allow no distinct aggregates,
+                      so counts are taken per document on the documents a
+                      wave read, and ``n_pages`` is each document's distinct
+                      non-empty media refs, summed (the bucket's distinct
+                      refs while no media_ref is shared across documents,
+                      as in ``corpus``).
+                      * ``run_job``: ``n_docs`` = valid documents with a
+                        text/media span, ``n_spans`` = their text/media
+                        spans, ``n_boxes`` = rows of the redactions write.
+                      * ``run_extraction_job``: ``n_docs`` = documents with
+                        a surviving html/pdf/text span or a non-empty media
+                        ref, ``n_spans`` = those spans plus the rows of the
+                        media_pages join, ``n_boxes`` = their CHARS. A media
+                        ref resolves only in the join, so a document whose
+                        refs all dangle counts in ``n_docs`` / ``n_pages``
+                        although it writes no row.
+
+One driver, ``run_waves``, runs both jobs: completed buckets → remaining
+(→ optional claim) → groups → the job's wave writes → ``lineage_rows`` →
+``append_checkpoint``.
 
 Bucketing uses xxhash64(doc_id) so the same document always lands in the same
 bucket across runs and cluster sizes — the property that makes resume exact
@@ -40,9 +51,12 @@ at 10^12 documents.
 from __future__ import annotations
 
 import time
+from collections import Counter
+from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 CHECKPOINT_SCHEMA = (
     "bucket int, status string, attempt int, n_docs long, n_spans long, "
@@ -91,73 +105,117 @@ def filter_remaining(docs_with_bucket: DataFrame, done: set[int]) -> DataFrame:
     return docs_with_bucket.filter(~F.col("bucket").isin(list(done)))
 
 
+def local_frame(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
+    """``rows`` (tuples in ``ddl`` column order) as an Arrow-built
+    ``LocalRelation``: writing it starts no Python worker, unlike a list
+    ``createDataFrame`` (a Python RDD)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow), schema)
+
+
+def lineage_frame(spark: SparkSession, rows: list[dict]) -> DataFrame:
+    """Checkpoint rows (dicts keyed by the schema's columns; only
+    ``bucket`` is required) as a ``CHECKPOINT_SCHEMA`` frame."""
+    return local_frame(spark, [
+        (r["bucket"], r.get("status", "done"), r.get("attempt", 1),
+         r.get("n_docs", 0), r.get("n_spans", 0), r.get("n_pages", 0),
+         r.get("n_boxes", 0), r.get("wall_sec", 0.0)) for r in rows],
+        CHECKPOINT_SCHEMA)
+
+
 def append_checkpoint(spark: SparkSession, ckpt_dir: str, rows: list[dict]) -> None:
     if not rows:
         return
-    spark.createDataFrame(
-        [(r["bucket"], r.get("status", "done"), r.get("attempt", 1),
-          r.get("n_docs", 0), r.get("n_spans", 0), r.get("n_pages", 0),
-          r.get("n_boxes", 0), r.get("wall_sec", 0.0)) for r in rows],
-        schema=CHECKPOINT_SCHEMA,
-    ).write.mode("append").parquet(ckpt_dir)
+    lineage_frame(spark, rows).write.mode("append").parquet(ckpt_dir)
+
+
+#: per-document distinct non-empty media refs (``n_pages``, both jobs);
+#: greatest() maps a null spans array (size null or -1) to 0
+PAGES_SQL = ("greatest(size(array_distinct(filter(transform(filter(spans, "
+             "s -> s.kind = 'media'), s -> s.media_ref), r -> r != ''))), 0)")
+
+
+def observe_lineage(df: DataFrame, obs: Observation, group: list[int],
+                    n_buckets: int, **values: str) -> DataFrame:
+    """``df`` with ``sum(values[k])`` over its rows of each bucket ``b`` in
+    ``group`` attached to ``obs`` as ``{k}_{b}``, collected by the action
+    that writes from the returned frame. Values are SQL text (one
+    driver→JVM call each), computed once per row."""
+    counted = df.select("*", bucket_col(n_buckets).alias("_lb"),
+                        *[F.expr(v).alias(f"_l_{k}") for k, v in values.items()])
+    return counted.observe(obs, *[
+        F.expr(f"sum(CASE WHEN _lb = {b} THEN _l_{k} END) AS {k}_{b}")
+        for b in group for k in values]).select(*df.columns)
 
 
 def observe_span_lineage(documents: DataFrame, obs: Observation,
                          group: list[int], n_buckets: int) -> DataFrame:
-    """``documents`` (doc_id, spans[]) with the span lineage of every bucket
-    in ``group`` attached to ``obs``; the counts are collected by the action
-    that writes the spans sink from the returned frame. One
-    ``sum(when(bucket == b, …))`` per bucket over per-document columns
-    computed once (the module docstring defines the counts)."""
-    # SQL text, not Python lambdas/Columns: each F.expr is one driver→JVM
-    # call, and this runs once per wave with 3 metrics per bucket.
-    # greatest() maps a null spans array (size null or -1) to 0
-    counted = documents.select(
-        "*", bucket_col(n_buckets).alias("_lb"),
-        F.expr("greatest(size(filter(spans, s -> s.kind IN ('text', 'media'))), 0)")
-        .alias("_ls"),
-        F.expr("greatest(size(array_distinct(filter(transform(filter(spans, "
-               "s -> s.kind = 'media'), s -> s.media_ref), r -> r != ''))), 0)")
-        .alias("_lp"))
-    metrics = []
-    for b in group:
-        metrics += [
-            F.expr(f"count(CASE WHEN _lb = {b} AND _ls > 0 AND doc_id IS NOT NULL "
-                   f"THEN 1 END) AS n_docs_{b}"),
-            F.expr(f"sum(CASE WHEN _lb = {b} THEN _ls END) AS n_spans_{b}"),
-            F.expr(f"sum(CASE WHEN _lb = {b} THEN _lp END) AS n_pages_{b}"),
-        ]
-    return counted.observe(obs, *metrics).select(*documents.columns)
+    """``run_job``'s span lineage on its valid documents (doc_id,
+    spans[]) — the module docstring defines the counts."""
+    spans = "greatest(size(filter(spans, s -> s.kind IN ('text', 'media'))), 0)"
+    return observe_lineage(
+        documents, obs, group, n_buckets,
+        n_docs=f"CASE WHEN doc_id IS NOT NULL AND {spans} > 0 THEN 1 ELSE 0 END",
+        n_spans=spans, n_pages=PAGES_SQL)
 
 
 def observe_box_lineage(redactions: DataFrame, obs: Observation,
-                        group: list[int]) -> DataFrame:
-    """``redactions`` (with its ``bucket`` column) with each bucket's row
-    count in ``group`` attached to ``obs``."""
-    return redactions.observe(obs, *[
-        F.expr(f"count(CASE WHEN bucket = {b} THEN 1 END) AS n_boxes_{b}")
-        for b in group])
+                        group: list[int], n_buckets: int) -> DataFrame:
+    """``run_job``'s redactions rows with each bucket's row count."""
+    return observe_lineage(redactions, obs, group, n_buckets, n_boxes="1")
 
 
-def lineage_rows(spans_obs: Observation, boxes_obs: Observation,
-                 group: list[int], wall_sec: float) -> list[dict]:
-    """Checkpoint rows for ``group`` from the two observations. Call only
-    after both writes SUCCEEDED: ``Observation.get`` blocks until its action
-    reports, and a failed write never does."""
-    m = {**spans_obs.get, **boxes_obs.get}
+def lineage_rows(observations: list[Observation], group: list[int],
+                 wall_sec: float) -> list[dict]:
+    """Checkpoint rows for ``group``, summing same-named metrics across
+    ``observations``. Call only after every write SUCCEEDED:
+    ``Observation.get`` blocks until its action reports, and a failed
+    write never does."""
+    m: Counter = Counter()
+    for obs in observations:
+        for k, v in obs.get.items():
+            m[k] += v or 0
     return [{"bucket": b, "status": "done",
-             **{k: m[f"{k}_{b}"] or 0
-                for k in ("n_docs", "n_spans", "n_pages", "n_boxes")},
+             **{k: m[f"{k}_{b}"] for k in ("n_docs", "n_spans", "n_pages", "n_boxes")},
              "wall_sec": wall_sec}
             for b in group]
 
 
-class StageTimer:
-    def __init__(self):
-        self.t0 = time.time()
-
-    def elapsed(self) -> float:
-        return time.time() - self.t0
+def run_waves(spark: SparkSession, ckpt_dir: str, documents: DataFrame,
+              n_buckets: int, bucket_group: int,
+              write_wave: Callable[[DataFrame, list[int]], list[Observation]],
+              claim: Callable[[list[int]], set[int]] | None = None) -> dict:
+    """The bucket-wave driver of both jobs. The buckets not yet done (and,
+    with ``claim``, won by this driver) go in groups of ``bucket_group`` to
+    ``write_wave(wave_documents, group)``, which writes the group's sinks
+    and returns the observations on them; the group's lineage is appended
+    once it returns, i.e. after every write committed."""
+    docs = with_bucket(documents, n_buckets)
+    done = completed_buckets(spark, ckpt_dir)
+    remaining = sorted(set(range(n_buckets)) - done)
+    stats = {"buckets_done_before": len(done), "waves": 0,
+             "buckets_skipped_claimed": 0}
+    if claim is not None and remaining:
+        won = claim(remaining)
+        stats["buckets_skipped_claimed"] = len(set(remaining) - won)
+        remaining = sorted(won)
+    for g in range(0, len(remaining), bucket_group):
+        group = remaining[g: g + bucket_group]
+        t0 = time.time()
+        observations = write_wave(
+            docs.filter(F.col("bucket").isin(group)).drop("bucket"), group)
+        append_checkpoint(spark, ckpt_dir, lineage_rows(
+            observations, group, (time.time() - t0) / len(group)))
+        stats["waves"] += 1
+    stats["buckets_total"] = n_buckets
+    return stats
 
 
 # ---------------------------------------------------------------------------
@@ -215,8 +273,8 @@ def claim_buckets(spark: SparkSession, ckpt_dir: str, buckets: list[int],
     if not buckets:
         return set()
     now = time.time()
-    rows = spark.createDataFrame(
-        [(int(b), claimant, now) for b in buckets], schema=CLAIMS_SCHEMA)
+    rows = local_frame(spark, [(int(b), claimant, now) for b in buckets],
+                       CLAIMS_SCHEMA)
     if backend is None:
         target = claims_target or _claims_dir(ckpt_dir)
         rows.write.mode("append").parquet(target)

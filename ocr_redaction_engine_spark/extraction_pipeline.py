@@ -1,13 +1,12 @@
 """Main-content extraction pipeline (north rule) — pure DataFrame wiring.
 
-    documents ──explode──┬─ html spans ── boilerplate strip (DOM blocks,
-                         │                length/link-density keep, ordered
-                         │                reassembly) ──────────────┐
-                         ├─ pdf spans ── two-column reading-order    │
-                         │               recovery (column-major) ────┤
-                         ├─ text spans ── passthrough ───────────────┼─ flat
-                         └─ media spans ── media_pages join ── OCR   │  span
-                                           full text ────────────────┘  rows
+    documents ──┬─ narrow column (per document, one array HOF pass):
+                │    html ── boilerplate strip (DOM blocks, length/link-
+                │            density keep, ordered reassembly)
+                │    pdf ─── two-column reading-order recovery
+                │    text ── passthrough ──────────── inline ──┐ flat
+                └─ explode ── media spans ── media_pages join ──┴─ span
+                                             (OCR full text)      rows
 
 The web generalization of the redaction pipeline (pipeline.py): where that
 job redacts PII from already-clean spans, this one recovers the MAIN CONTENT
@@ -21,12 +20,18 @@ three crawl formats).
 Every branch is pure Catalyst — regex + split + higher-order functions; no
 Python in the hot path. Shuffles: exactly ONE — the media_ref equi-join on
 the media branch (plan-pinned in tests/test_extraction_pipeline.py). The
-html strip is per-row array HOFs (a span is one row, so DOM-block
-segmentation, scoring, keep-filter, and ordered reassembly never leave the
-task); pdf/text are narrow projections. Output is the flat span-sequence
-contract table (doc_id, order, kind, text, media_ref) — span-sequence
-equality vs the pure-Python oracle (oracle.expected_extracted_spans) is the
-correctness gate.
+html/pdf/text spans never leave their document row: one SQL array
+expression maps a document's spans to its surviving ``(order, kind, text)``
+structs (DOM-block segmentation, scoring, keep-filter and ordered
+reassembly for html; column-major reorder for pdf), which ``inline`` then
+flattens. Output is the flat span-sequence contract table (doc_id, order,
+kind, text, media_ref) — span-sequence equality vs the pure-Python oracle
+(oracle.expected_extracted_spans) is the correctness gate.
+
+Lineage (counts defined in checkpoint.py) is observed during the
+``main_spans`` write: on the document rows and on the joined media rows.
+A document whose media refs all dangle writes no row yet counts in
+``n_docs`` and ``n_pages``; a re-read of ``main_spans`` would count neither.
 
 Scale notes (10^12 docs): the text branches scan, transform, and emit with
 zero exchange — linear scaling by construction. The media join's build side
@@ -39,7 +44,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import checkpoint as ckpt
@@ -54,70 +59,41 @@ class ExtractionConfig:
     bucket_group: int = 8          # buckets committed per wave
 
 
-def extract_html_spans(spans: DataFrame, cfg: ExtractionConfig) -> DataFrame:
-    """HTML boilerplate strip per span — SHUFFLE-FREE: because one span is
-    one row, the DOM-block segmentation + scoring + keep-filter + ordered
-    reassembly all run as array higher-order functions on that row (split →
-    transform/filter → concat_ws), never leaving the task. Semantics are
-    identical to the grouped variant (analytics/extraction.strip_boilerplate,
-    kept for block-level analytics); a span whose every block is dropped
-    yields no row, matching the grouped groupBy behavior and the oracle."""
-    html = spans.filter(F.col("kind") == "html").select(
-        "doc_id", "offset",
-        F.regexp_replace(
-            F.regexp_replace("text", r"(?s)<script[^>]*>.*?</script>", " "),
-            r"(?s)<style[^>]*>.*?</style>", " ",
-        ).alias("clean"),
-    )
+def _narrow_sql(cfg: ExtractionConfig) -> str:
+    """SQL (one driver→JVM call, unlike Python-lambda Columns) for a
+    document's surviving html/pdf/text spans: ``(order, kind, text)``
+    structs in span order.
 
-    def btext(b):
-        return F.trim(F.regexp_replace(F.regexp_replace(b, r"<[^>]*>", " "), r"\s+", " "))
-
-    def anchor_chars(b):
-        return F.aggregate(
-            F.regexp_extract_all(b, F.lit(r"<a [^>]*>([^<]*)</a>"), F.lit(1)),
-            F.lit(0).cast("long"), lambda a, x: a + F.length(x))
-
-    scored = html.select(
-        "doc_id", "offset",
-        F.filter(
-            F.transform(
-                F.split("clean", r"</p>|</div>|</nav>|</footer>"),
-                lambda b: F.struct(
-                    btext(b).alias("btext"),
-                    anchor_chars(b).alias("anchor_chars"),
-                ),
-            ),
-            lambda s: (F.length(s["btext"]) >= cfg.min_len)
-            & ((s["anchor_chars"] / F.greatest(F.length(s["btext"]), F.lit(1)))
-               <= cfg.max_link_density),
-        ).alias("kept"),
-    )
-    return scored.filter(F.size("kept") > 0).select(
-        "doc_id", F.col("offset").alias("order"), F.lit("html").alias("kind"),
-        F.concat_ws(" ", F.transform("kept", lambda s: s["btext"])).alias("text"),
-        F.lit("").alias("media_ref"))
-
-
-def extract_pdf_spans(spans: DataFrame) -> DataFrame:
-    """Two-column reading-order recovery: the span text is the naive y-then-x
-    scan of a two-column page (token 2r = column 0 row r, token 2r+1 =
-    column 1 row r), so the true reading order is all even-index tokens then
-    all odd-index tokens. Array HOFs only — narrow, zero shuffle."""
-    toks = F.split(F.col("text"), " ")
-    evens = F.filter(toks, lambda x, i: i % 2 == F.lit(0))
-    odds = F.filter(toks, lambda x, i: i % 2 == F.lit(1))
-    return spans.filter(F.col("kind") == "pdf").select(
-        "doc_id", F.col("offset").alias("order"), F.lit("pdf").alias("kind"),
-        F.concat_ws(" ", F.concat(evens, odds)).alias("text"),
-        F.lit("").alias("media_ref"))
-
-
-def extract_text_spans(spans: DataFrame) -> DataFrame:
-    """Plain text spans are already main content — passthrough."""
-    return spans.filter(F.col("kind") == "text").select(
-        "doc_id", F.col("offset").alias("order"), F.lit("text").alias("kind"),
-        "text", F.lit("").alias("media_ref"))
+    * html: strip script/style, split into DOM blocks, keep blocks of at
+      least ``min_len`` chars with anchor chars / chars at most
+      ``max_link_density`` (computed once per span, in the first
+      ``transform``), join them; a span keeping no block is dropped.
+    * pdf: the text is the y-then-x scan of a two-column page (token 2r =
+      column 0 row r, 2r+1 = column 1 row r): even tokens, then odd ones.
+    * text: already main content — passthrough."""
+    clean = (r"regexp_replace(regexp_replace(s.text, "
+             r"r'(?s)<script[^>]*>.*?</script>', ' '), "
+             r"r'(?s)<style[^>]*>.*?</style>', ' ')")
+    btext = r"trim(regexp_replace(regexp_replace(b, r'<[^>]*>', ' '), r'\s+', ' '))"
+    anchor_chars = (r"aggregate(regexp_extract_all(b, r'<a [^>]*>([^<]*)</a>', 1), "
+                    r"0L, (a, x) -> a + length(x))")
+    kept = (f"transform(filter(transform(split({clean}, r'</p>|</div>|</nav>|</footer>'), "
+            f"b -> named_struct('btext', {btext}, 'anchor_chars', {anchor_chars})), "
+            f"k -> length(k.btext) >= {int(cfg.min_len)} AND k.anchor_chars / "
+            f"greatest(length(k.btext), 1) <= {float(cfg.max_link_density)!r}D), "
+            f"k -> k.btext)")
+    toks = "split(s.text, ' ')"
+    pdf = (f"concat_ws(' ', concat(filter({toks}, (x, i) -> i % 2 = 0), "
+           f"filter({toks}, (x, i) -> i % 2 = 1)))")
+    return (
+        "transform(filter(transform("
+        "filter(spans, s -> s.kind IN ('html', 'pdf', 'text')), "
+        "s -> named_struct('order', s.offset, 'kind', s.kind, 'text', s.text, "
+        f"'kept', CASE WHEN s.kind = 'html' THEN {kept} END)), "
+        "s -> s.kind != 'html' OR size(s.kept) > 0), "
+        "s -> named_struct('order', s.`order`, 'kind', s.kind, 'text', "
+        "CASE s.kind WHEN 'html' THEN concat_ws(' ', s.kept) "
+        f"WHEN 'pdf' THEN {pdf} ELSE s.text END))")
 
 
 def extract_media_spans(spans: DataFrame, media_pages: DataFrame) -> DataFrame:
@@ -135,109 +111,80 @@ def extract_media_spans(spans: DataFrame, media_pages: DataFrame) -> DataFrame:
     )
 
 
-def _narrow_kind_spans(spans: DataFrame, cfg: ExtractionConfig) -> DataFrame:
-    """html + pdf + text in ONE pass: the three shuffle-free branches share
-    the row shape, so a kind-dispatched CASE computes each row's extracted
-    text in a single scan instead of a 3-way self-union that re-reads the
-    documents table per branch (at 100 TB the scan count IS the cost).
-    Row-for-row identical to the per-branch operators, which remain the
-    unit-tested single-kind API."""
-    clean = F.regexp_replace(
-        F.regexp_replace("text", r"(?s)<script[^>]*>.*?</script>", " "),
-        r"(?s)<style[^>]*>.*?</style>", " ")
-
-    def btext(b):
-        return F.trim(F.regexp_replace(F.regexp_replace(b, r"<[^>]*>", " "), r"\s+", " "))
-
-    def anchor_chars(b):
-        return F.aggregate(
-            F.regexp_extract_all(b, F.lit(r"<a [^>]*>([^<]*)</a>"), F.lit(1)),
-            F.lit(0).cast("long"), lambda a, x: a + F.length(x))
-
-    kept = F.filter(
-        F.transform(
-            F.split(clean, r"</p>|</div>|</nav>|</footer>"),
-            lambda b: F.struct(btext(b).alias("btext"),
-                               anchor_chars(b).alias("anchor_chars"))),
-        lambda s: (F.length(s["btext"]) >= cfg.min_len)
-        & ((s["anchor_chars"] / F.greatest(F.length(s["btext"]), F.lit(1)))
-           <= cfg.max_link_density))
-    html_text = F.concat_ws(" ", F.transform(kept, lambda s: s["btext"]))
-
-    toks = F.split(F.col("text"), " ")
-    evens = F.filter(toks, lambda x, i: i % 2 == F.lit(0))
-    odds = F.filter(toks, lambda x, i: i % 2 == F.lit(1))
-    pdf_text = F.concat_ws(" ", F.concat(evens, odds))
-
-    out_text = (F.when(F.col("kind") == "html", html_text)
-                .when(F.col("kind") == "pdf", pdf_text)
-                .otherwise(F.col("text")))
-    keep = F.when(F.col("kind") == "html", F.size(kept) > 0).otherwise(F.lit(True))
-    return (spans.where(F.col("kind").isin("html", "pdf", "text"))
-            .where(keep)
-            .select("doc_id", F.col("offset").alias("order"), "kind",
-                    out_text.alias("text"), F.lit("").alias("media_ref")))
+def _extraction_plan(documents: DataFrame, media_pages: DataFrame,
+                     cfg: ExtractionConfig, observe_docs=None,
+                     observe_media=None) -> DataFrame:
+    """``extract_spans`` with optional ``DataFrame -> DataFrame`` hooks on
+    the document rows carrying the ``narrow`` column and on the joined
+    media rows (run_extraction_job attaches its lineage there)."""
+    # without a hook, inline the expression itself: over a projected column
+    # Spark infers a size(narrow) > 0 filter and pushes it through the
+    # projection, evaluating the expression twice (it cannot be pushed
+    # below an observation)
+    docs, narrow = documents, F.expr(_narrow_sql(cfg))
+    if observe_docs:
+        docs = observe_docs(documents.select("doc_id", "spans", narrow.alias("narrow")))
+        narrow = F.col("narrow")
+    media = extract_media_spans(explode_spans(documents), media_pages)
+    if observe_media:
+        media = observe_media(media)
+    return (docs.select("doc_id", F.inline(narrow), F.lit("").alias("media_ref"))
+            .unionByName(media))
 
 
 def extract_spans(documents: DataFrame, media_pages: DataFrame,
                   config: ExtractionConfig | None = None) -> DataFrame:
-    """Full extraction plan: explode → kind-dispatched narrow pass +
-    media-join branch → union. TWO scans of the documents table total
-    (narrow CASE pass, media join side), not one per kind. Returns the
-    flat span-sequence table (doc_id, order, kind, text, media_ref)."""
-    cfg = config or ExtractionConfig()
-    spans = explode_spans(documents)
-    return (
-        _narrow_kind_spans(spans, cfg)
-        .unionByName(extract_media_spans(spans, media_pages))
-    )
+    """Full extraction plan: the per-document narrow pass (html/pdf/text)
+    + the media-join branch → union. TWO scans of the documents table
+    total, not one per kind; a ``kind != 'media'`` filter on the result
+    prunes the media branch at plan time. Returns the flat span-sequence
+    table (doc_id, order, kind, text, media_ref)."""
+    return _extraction_plan(documents, media_pages, config or ExtractionConfig())
+
+
+def observe_narrow_lineage(docs: DataFrame, obs: Observation, group: list[int],
+                           n_buckets: int) -> DataFrame:
+    """Document rows (doc_id, spans, narrow) with their per-bucket
+    ``n_docs``, ``n_pages`` and html/pdf/text ``n_spans`` / chars (as
+    ``n_boxes``) attached to ``obs``."""
+    return ckpt.observe_lineage(
+        docs, obs, group, n_buckets,
+        n_docs=("CASE WHEN doc_id IS NOT NULL AND (size(narrow) > 0 "
+                f"OR {ckpt.PAGES_SQL} > 0) THEN 1 ELSE 0 END"),
+        n_spans="greatest(size(narrow), 0)",
+        n_boxes="aggregate(narrow, 0L, (a, s) -> a + coalesce(length(s.text), 0))",
+        n_pages=ckpt.PAGES_SQL)
+
+
+def observe_media_lineage(media: DataFrame, obs: Observation, group: list[int],
+                          n_buckets: int) -> DataFrame:
+    """Joined media rows with their per-bucket ``n_spans`` and chars (as
+    ``n_boxes``) attached to ``obs``."""
+    return ckpt.observe_lineage(media, obs, group, n_buckets,
+                                n_spans="1", n_boxes="length(text)")
 
 
 def run_extraction_job(spark: SparkSession, documents_path: str,
                        media_pages_path: str, out_dir: str, ckpt_dir: str,
                        config: ExtractionConfig | None = None) -> dict:
-    """Batch extraction with partition-granular resume — same lineage
-    machinery as the redaction job (checkpoint.py): stable
-    xxhash64(doc_id) buckets, bucket-partitioned dynamic overwrite
-    (idempotent reruns), lineage appended only after the data commit."""
+    """Batch extraction with partition-granular resume on the wave driver
+    shared with the redaction job (checkpoint.run_waves); lineage is
+    observed during the ``main_spans`` write."""
     cfg = config or ExtractionConfig()
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    docs = ckpt.with_bucket(spark.read.parquet(documents_path), cfg.n_buckets)
     media_pages = spark.read.parquet(media_pages_path)
-    done = ckpt.completed_buckets(spark, ckpt_dir)
-    remaining = sorted(set(range(cfg.n_buckets)) - done)
 
-    stats = {"buckets_done_before": len(done), "waves": 0}
-    for g in range(0, len(remaining), cfg.bucket_group):
-        group = remaining[g: g + cfg.bucket_group]
-        timer = ckpt.StageTimer()
-        wave_docs = docs.filter(F.col("bucket").isin(group))
-        out = ckpt.with_bucket(
-            extract_spans(wave_docs.drop("bucket"), media_pages, cfg), cfg.n_buckets)
-        out.write.mode("overwrite").partitionBy("bucket").parquet(f"{out_dir}/main_spans")
+    def write_wave(wave_docs, group):
+        docs_obs, media_obs = Observation(), Observation()
+        out = _extraction_plan(
+            wave_docs, media_pages, cfg,
+            observe_docs=lambda d: observe_narrow_lineage(
+                d, docs_obs, group, cfg.n_buckets),
+            observe_media=lambda m: observe_media_lineage(
+                m, media_obs, group, cfg.n_buckets))
+        ckpt.with_bucket(out, cfg.n_buckets).write.mode("overwrite") \
+            .partitionBy("bucket").parquet(f"{out_dir}/main_spans")
+        return [docs_obs, media_obs]
 
-        m = {r["bucket"]: r for r in
-             spark.read.parquet(f"{out_dir}/main_spans")
-             .filter(F.col("bucket").isin(group))
-             .groupBy("bucket")
-             .agg(F.countDistinct("doc_id").alias("n_docs"),
-                  F.count("*").alias("n_spans"),
-                  F.countDistinct(F.when(F.col("media_ref") != "", F.col("media_ref")))
-                  .alias("n_pages"),
-                  F.sum(F.length("text")).alias("n_chars"))
-             .collect()}
-        wall = timer.elapsed()
-        ckpt.append_checkpoint(spark, ckpt_dir, [
-            {"bucket": bk, "status": "done",
-             "n_docs": m[bk]["n_docs"] if bk in m else 0,
-             "n_spans": m[bk]["n_spans"] if bk in m else 0,
-             "n_pages": m[bk]["n_pages"] if bk in m else 0,
-             # lineage schema reuse: n_boxes carries extracted chars here
-             "n_boxes": int(m[bk]["n_chars"]) if bk in m and m[bk]["n_chars"] is not None else 0,
-             "wall_sec": wall / max(1, len(group))}
-            for bk in group
-        ])
-        stats["waves"] += 1
-    stats["buckets_total"] = cfg.n_buckets
-    return stats
+    return ckpt.run_waves(spark, ckpt_dir, spark.read.parquet(documents_path),
+                          cfg.n_buckets, cfg.bucket_group, write_wave)

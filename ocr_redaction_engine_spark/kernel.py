@@ -401,12 +401,18 @@ def _lower_places(places_t: tuple) -> tuple:
 def _places_literal_ok(places_t: tuple) -> bool:
     """The ``str.find`` fast path is sound only for plain-ASCII,
     metachar-free, newline-free place literals (the shipped PLACES_LIST
-    qualifies). Places loaded via ``load_places`` are arbitrary regex
-    fragments per the reference's ``_ci(place).search`` inner test, so a
-    metachar ('.') or non-ASCII case-folding place must take the
-    regex-union prefilter instead."""
-    return all(p.isascii() and re.escape(p) == p and "\n" not in p
-               for p in places_t)
+    qualifies). Spaces are allowed: a space is literal in the regex too,
+    and a literal without a newline cannot straddle the token separator.
+    Places loaded via ``load_places`` are arbitrary regex fragments per the
+    reference's ``_ci(place).search`` inner test, so a metachar ('.') or
+    non-ASCII case-folding place must take the regex prefilter instead."""
+    return all(p.isascii() and re.escape(p.replace(" ", "")) == p.replace(" ", "")
+               and "\n" not in p for p in places_t)
+
+
+#: a backreference: an alternation renumbers groups, so a union of places
+#: would point it at another place's group
+_BACKREF = re.compile(r"\\[0-9]|\(\?P=")
 
 
 def _place_candidates(words, place_list):
@@ -421,15 +427,20 @@ def _place_candidates(words, place_list):
     Non-literal place lists (see ``_places_literal_ok``) fall back to one
     unescaped IGNORECASE union regex per token — an exactly equivalent
     prefilter for the inner ``_ci(place).search(t)`` test by ∃-semantics —
-    and to all indices if the union itself fails to compile (in which case
-    the inner loop raises on the same bad pattern, like the reference)."""
+    or, when a place holds a backreference, to the per-place test itself;
+    and to all indices if a pattern fails to compile (in which case the
+    inner loop raises on the same bad pattern, like the reference)."""
     places_t = tuple(place_list)
     if not _places_literal_ok(places_t):
         try:
-            union = _ci_union(places_t)
+            if any(_BACKREF.search(p) for p in places_t):
+                pats = [_ci(p) for p in places_t]
+            else:
+                pats = [_ci_union(places_t)]
         except re.error:
             return list(range(len(words)))
-        return [i for i, w in enumerate(words) if union.search(w[4])]
+        return [i for i, w in enumerate(words)
+                if any(r.search(w[4]) for r in pats)]
     lowered = "\n".join(w[4] for w in words).lower()
     starts, pos = [], 0
     for w in words:

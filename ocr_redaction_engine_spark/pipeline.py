@@ -24,7 +24,6 @@ import threading
 from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, Observation, SparkSession
-from pyspark.sql import functions as F
 
 from . import checkpoint as ckpt
 from .operators.explode import explode_spans, route_spans
@@ -117,7 +116,7 @@ def run_pipeline(documents: DataFrame, media_pages: DataFrame,
         else:
             documents, invalid = route_with_collected(documents, inv_rows)
     else:
-        invalid = documents.sparkSession.createDataFrame([], INVALID_DDL)
+        invalid = ckpt.local_frame(documents.sparkSession, [], INVALID_DDL)
     _, media_spans = route_spans(explode_spans(documents))
 
     pages = tokenize_fixture(media_spans, media_pages)
@@ -152,29 +151,29 @@ def run_job(spark: SparkSession, documents_path: str, media_pages_path: str,
     cfg = config or PipelineConfig()
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
-    docs = ckpt.with_bucket(spark.read.parquet(documents_path), cfg.n_buckets)
+    documents = spark.read.parquet(documents_path)
     media_pages = spark.read.parquet(media_pages_path)
-    done = ckpt.completed_buckets(spark, ckpt_dir)
-    remaining = sorted(set(range(cfg.n_buckets)) - done)
-    buckets_lost = []
-    if cfg.claimant is not None and remaining:
-        # S2 multi-writer claim: process only the buckets this driver wins
-        # (single-winner rule documented at checkpoint.claim_buckets)
-        won = ckpt.claim_buckets(
-            spark, ckpt_dir, remaining, cfg.claimant,
-            ttl_sec=cfg.claim_ttl_sec, backend=cfg.claims_backend,
-            claims_target=cfg.claims_target)
-        buckets_lost = sorted(set(remaining) - won)
-        if buckets_lost:
-            # not necessarily a problem (another live driver owns them) —
-            # but if THAT driver crashed, these buckets stay unprocessed
-            # until a rerun with claim_ttl_sec set (or its claimant id)
-            _log.warning(
-                "run_job[%s]: skipping %d bucket(s) claimed by other "
-                "drivers and not yet done: %s — if the claimant crashed, "
-                "rerun with claim_ttl_sec set to reap the stale leases",
-                cfg.claimant, len(buckets_lost), buckets_lost)
-        remaining = sorted(won)
+
+    claim = None
+    if cfg.claimant is not None:
+        def claim(remaining):
+            # S2 multi-writer claim: process only the buckets this driver
+            # wins (single-winner rule documented at checkpoint.claim_buckets)
+            won = ckpt.claim_buckets(
+                spark, ckpt_dir, remaining, cfg.claimant,
+                ttl_sec=cfg.claim_ttl_sec, backend=cfg.claims_backend,
+                claims_target=cfg.claims_target)
+            lost = sorted(set(remaining) - won)
+            if lost:
+                # not necessarily a problem (another live driver owns them) —
+                # but if THAT driver crashed, these buckets stay unprocessed
+                # until a rerun with claim_ttl_sec set (or its claimant id)
+                _log.warning(
+                    "run_job[%s]: skipping %d bucket(s) claimed by other "
+                    "drivers and not yet done: %s — if the claimant crashed, "
+                    "rerun with claim_ttl_sec set to reap the stale leases",
+                    cfg.claimant, len(lost), lost)
+            return won
 
     # live at-least-once progress accumulators (A8); exact numbers live in
     # the checkpoint lineage rows
@@ -190,30 +189,23 @@ def run_job(spark: SparkSession, documents_path: str, media_pages_path: str,
         ).parquet(documents_path)
         inv_rows = collect_invalid(slim_docs, media_pages, cfg.ext_whitelist)
         if inv_rows is None:   # > COLLECT_CAP invalid docs — let waves route lazily
-            inv_df = validity_route(docs.drop("bucket"), media_pages,
-                                    cfg.ext_whitelist)[1]
+            inv_df = validity_route(documents, media_pages, cfg.ext_whitelist)[1]
         else:
-            inv_df = spark.createDataFrame(
-                [tuple(r) for r in inv_rows], INVALID_DDL)
+            inv_df = ckpt.local_frame(spark, [tuple(r) for r in inv_rows], INVALID_DDL)
     else:
         inv_rows = []
-        inv_df = spark.createDataFrame([], INVALID_DDL)
+        inv_df = ckpt.local_frame(spark, [], INVALID_DDL)
     ckpt.with_bucket(inv_df, cfg.n_buckets).write.mode("overwrite") \
         .partitionBy("bucket").parquet(f"{out_dir}/invalid")
     wave_cfg = replace(cfg, invalid_rows=inv_rows)
 
-    stats = {"buckets_done_before": len(done), "waves": 0,
-             "buckets_skipped_claimed": len(buckets_lost)}
-    for g in range(0, len(remaining), cfg.bucket_group):
-        group = remaining[g: g + cfg.bucket_group]
-        timer = ckpt.StageTimer()
-        wave_docs = docs.filter(F.col("bucket").isin(group))
+    def write_wave(wave_docs, group):
         # per-bucket lineage (A8) is observed on the sink writes below: the
         # span counts at document level on the valid documents feeding the
         # spans sink, n_boxes on the redactions rows
         spans_obs, boxes_obs = Observation(), Observation()
         outs = run_pipeline(
-            wave_docs.drop("bucket"), media_pages, wave_cfg, counters,
+            wave_docs, media_pages, wave_cfg, counters,
             observe_spans=lambda d: ckpt.observe_span_lineage(
                 d, spans_obs, group, cfg.n_buckets))
         # redactions + values both derive from the flat extract output;
@@ -239,7 +231,8 @@ def run_job(spark: SparkSession, documents_path: str, media_pages_path: str,
         spans_t.start()
         try:
             red = ckpt.observe_box_lineage(
-                ckpt.with_bucket(outs["redactions"], cfg.n_buckets), boxes_obs, group)
+                ckpt.with_bucket(outs["redactions"], cfg.n_buckets), boxes_obs,
+                group, cfg.n_buckets)
             red.write.mode("overwrite").partitionBy("bucket").parquet(f"{out_dir}/redactions")
             vals = ckpt.with_bucket(outs["values"], cfg.n_buckets)
             vals.write.mode("overwrite").partitionBy("bucket").parquet(f"{out_dir}/values")
@@ -249,12 +242,10 @@ def run_job(spark: SparkSession, documents_path: str, media_pages_path: str,
         # a failed write never reports its observation (get would block)
         if spans_err:
             raise spans_err[0]
+        return [spans_obs, boxes_obs]
 
-        # lineage last: only after all three sinks committed
-        ckpt.append_checkpoint(spark, ckpt_dir, ckpt.lineage_rows(
-            spans_obs, boxes_obs, group, timer.elapsed() / len(group)))
-        stats["waves"] += 1
-    stats["buckets_total"] = cfg.n_buckets
+    stats = ckpt.run_waves(spark, ckpt_dir, documents, cfg.n_buckets,
+                           cfg.bucket_group, write_wave, claim)
     stats["acc_pages"] = counters["pages"].value
     stats["acc_rejected"] = counters["rejected"].value
     if inv_rows is not None:

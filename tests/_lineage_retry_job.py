@@ -1,15 +1,22 @@
-"""Subprocess body for test_lineage_observed: one ``run_job`` in a
-``local[2,2]`` session (a task may fail once and be retried) where one
-spans-write task and one redactions-write task each raise once, after the
-lineage observation has already counted some of their rows.
+"""Subprocess body for test_lineage_observed: one job in a ``local[2,2]``
+session (a task may fail once and be retried) where a write task under
+each of the job's two lineage observations raises once, after the
+observation has already counted some of its rows.
 
-The failures are injected from the outside: the two ``checkpoint.observe_*``
+* ``redact``: ``run_job``; a spans-write task and a redactions-write task
+  fail (markers ``spans`` and ``boxes``).
+* ``extract``: ``run_extraction_job``; a ``main_spans``-write task on the
+  document rows and one on the joined media rows fail (markers ``narrow``
+  and ``media``).
+
+The failures are injected from the outside: the job's two ``observe_*``
 functions are wrapped so a Python filter that raises on its Nth row of the
-first task to reach it sits ABOVE the observed node. A marker file per sink
-makes the failure happen once per job; the caller checks the markers exist.
+first task to reach it sits ABOVE the observed node. A marker file per
+observation makes the failure happen once per job; the caller checks the
+markers exist.
 
-    python3 tests/_lineage_retry_job.py INPUT_DIR OUT_DIR CKPT_DIR MARKER_DIR \
-        N_BUCKETS BUCKET_GROUP
+    python3 tests/_lineage_retry_job.py {redact|extract} INPUT_DIR OUT_DIR \
+        CKPT_DIR MARKER_DIR N_BUCKETS BUCKET_GROUP
 """
 
 import json
@@ -19,6 +26,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ocr_redaction_engine_spark import checkpoint as ckpt  # noqa: E402
+from ocr_redaction_engine_spark import extraction_pipeline as xp  # noqa: E402
 from ocr_redaction_engine_spark.pipeline import PipelineConfig, run_job  # noqa: E402
 from ocr_redaction_engine_spark.session import get_spark  # noqa: E402
 
@@ -49,21 +57,32 @@ def fail_once(marker: str, nth: int):
     return F.udf(gate, "boolean").asNondeterministic()
 
 
+#: job → (module, {observe function: (marker, failing row)}, run, config)
+JOBS = {
+    "redact": (ckpt, {"observe_span_lineage": ("spans", 2),
+                      "observe_box_lineage": ("boxes", 3)},
+               run_job, PipelineConfig),
+    "extract": (xp, {"observe_narrow_lineage": ("narrow", 2),
+                     "observe_media_lineage": ("media", 3)},
+                xp.run_extraction_job, xp.ExtractionConfig),
+}
+
+
 def main():
-    inp, out, ckpt_dir, markers = sys.argv[1:5]
-    n_buckets, group = int(sys.argv[5]), int(sys.argv[6])
+    job, inp, out, ckpt_dir, markers = sys.argv[1:6]
+    n_buckets, group = int(sys.argv[6]), int(sys.argv[7])
     spark = get_spark("lineage-retry", shuffle_partitions=2,
                       extra={"spark.master": "local[2,2]"})
     spark.sparkContext.setLogLevel("ERROR")
 
-    span_obs, box_obs = ckpt.observe_span_lineage, ckpt.observe_box_lineage
-    span_gate = fail_once(os.path.join(markers, "spans"), 2)
-    box_gate = fail_once(os.path.join(markers, "boxes"), 3)
-    ckpt.observe_span_lineage = lambda d, *a: span_obs(d, *a).where(span_gate("doc_id"))
-    ckpt.observe_box_lineage = lambda d, *a: box_obs(d, *a).where(box_gate("doc_id"))
+    module, hooks, run, config = JOBS[job]
+    for name, (marker, nth) in hooks.items():
+        real, gate = getattr(module, name), fail_once(os.path.join(markers, marker), nth)
+        setattr(module, name,
+                lambda d, *a, real=real, gate=gate: real(d, *a).where(gate("doc_id")))
 
-    stats = run_job(spark, f"{inp}/documents", f"{inp}/media_pages", out, ckpt_dir,
-                    PipelineConfig(n_buckets=n_buckets, bucket_group=group))
+    stats = run(spark, f"{inp}/documents", f"{inp}/media_pages", out, ckpt_dir,
+                config(n_buckets=n_buckets, bucket_group=group))
     print("STATS " + json.dumps(stats))
     spark.stop()
 

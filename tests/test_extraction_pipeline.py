@@ -5,6 +5,7 @@ UDF-free plan gate (every branch must stay in Catalyst)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from ocr_redaction_engine_spark import checkpoint, corpus, oracle
 from ocr_redaction_engine_spark.corpus import write_web_corpus
@@ -67,29 +68,30 @@ def test_plan_is_udf_free(web_dfs):
     assert "FlatMapsInPandas" not in plan and "MapInPandas" not in plan
 
 
-def test_html_pdf_text_branches_are_exchange_free(spark, web_dfs):
-    """The html strip runs as per-row array HOFs and pdf/text are narrow
-    projections: dropping the media branch, the physical plan must contain
-    ZERO Exchange — the whole non-media pipeline is scan → project → union.
-    (The media join is the pipeline's single, unavoidable shuffle.)"""
-    from ocr_redaction_engine_spark.extraction_pipeline import (
-        ExtractionConfig,
-        extract_html_spans,
-        extract_pdf_spans,
-        extract_text_spans,
-    )
-    from ocr_redaction_engine_spark.operators.explode import explode_spans
-
-    docs_df, _ = web_dfs
-    spans = explode_spans(docs_df)
-    cfg = ExtractionConfig()
-    nonmedia = (
-        extract_html_spans(spans, cfg)
-        .unionByName(extract_pdf_spans(spans))
-        .unionByName(extract_text_spans(spans))
-    )
+def test_html_pdf_text_branches_are_exchange_free(web_dfs):
+    """The html strip runs as per-document array HOFs and pdf/text are
+    narrow projections: filtering the media branch away, the physical plan
+    must contain ZERO Exchange and no join — the whole non-media pipeline
+    is scan → project → inline. (The media join is the pipeline's single,
+    unavoidable shuffle.)"""
+    docs_df, pages_df = web_dfs
+    nonmedia = extract_spans(docs_df, pages_df).where(F.col("kind") != "media")
     plan = nonmedia._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+    assert "Exchange" not in plan and "Join" not in plan, plan
+
+
+@pytest.mark.parametrize("kind", ["html", "pdf", "text", "media"])
+def test_each_kind_matches_oracle(spark, web_corpus, web_dfs, kind):
+    """Per kind, through ``extract_spans``: documents holding only that
+    kind's spans extract to exactly the oracle's spans."""
+    docs, pages = web_corpus
+    only = [{"doc_id": d["doc_id"], "spans": [s for s in d["spans"] if s["kind"] == kind]}
+            for d in docs]
+    got = sorted(tuple(r) for r in
+                 extract_spans(docs_to_df(spark, only), web_dfs[1]).collect())
+    exp = sorted(oracle.expected_extracted_spans(only, pages))
+    assert len(exp) > 50 and {r[2] for r in got} == {kind}
+    assert got == exp
 
 
 class _Boom(RuntimeError):

@@ -120,3 +120,33 @@ def test_place_candidates_nonliteral_fallback():
     # uncompilable pattern: degrade to all indices; the inner loop then
     # raises on the same bad pattern exactly like the reference would
     assert _place_candidates(words, ["(["]) == [0, 1, 2, 3]
+
+
+def test_place_candidates_backreference_places():
+    """A union of places renumbers their groups, so ``(a)\\1`` inside
+    ``(?:(x))|(?:(a)\\1)`` would point at ``(x)``: places holding a
+    backreference must take the per-place test, which hits both tokens."""
+    from ocr_redaction_engine_spark.kernel import _ci, _place_candidates
+
+    words = [[0, 0, 10, 10, "xx"], [0, 20, 10, 30, "aa"], [0, 40, 10, 50, "ab"]]
+    for places in (["(x)", r"(a)\1"], ["(?P<p>x)", "(?P<q>a)(?P=q)"]):
+        per_place = [i for i, w in enumerate(words)
+                     if any(_ci(p).search(w[4]) for p in places)]
+        assert per_place == [0, 1]
+        assert _place_candidates(words, places) == per_place
+
+
+def test_places_with_spaces_take_the_literal_path():
+    """A place with a space is still a literal: it takes the ``str.find``
+    path, and that path gives the regex prefilter's candidates."""
+    from ocr_redaction_engine_spark.kernel import (
+        _ci_union, _place_candidates, _places_literal_ok)
+
+    places = ("New Delhi", "Pune")
+    assert _places_literal_ok(places)
+    words = [[0, 0, 10, 10, "New"], [0, 20, 10, 30, "Delhi"],
+             [0, 40, 10, 50, "PUNE,"], [0, 60, 10, 70, "new delhi"],
+             [0, 80, 10, 90, "NewDelhi"]]
+    union = _ci_union(places)
+    assert _place_candidates(words, list(places)) == [
+        i for i, w in enumerate(words) if union.search(w[4])] == [2, 3]
